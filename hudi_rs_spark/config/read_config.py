@@ -19,10 +19,6 @@ class HudiReadOptions:
     filters: list[tuple[str, str, str]] = field(default_factory=list)
     projection: list[str] | None = None
     limit: int | None = None  # row-accurate fetch (op 21)
-    # MOR log decode locality: "auto" switches to executor-side
-    # (mapInPandas) when log volume warrants it; "driver"/"distributed"
-    # force a path
-    log_decode: str = "auto"
     input_partitions: int = 0  # 0 -> let Spark decide
     batch_size: int = 1024  # streaming read batch rows
     # per-read hoodie.read.* override bag (reader-spec §2: "hudi_options
@@ -34,9 +30,6 @@ class HudiReadOptions:
     def validate(self) -> None:
         if self.query_type not in ("snapshot", "incremental"):
             raise ValueError(f"invalid query type: {self.query_type}")
-        if self.query_type == "snapshot" and (self.start_timestamp or self.end_timestamp):
-            # reference strips irrelevant timestamps (read_options.rs:247-262)
-            pass
 
     # -- fluent builders (reference HudiReadOptions.with_*,
     # python/hudi/_internal.pyi:67-79) — each returns a COPY so a base
@@ -93,7 +86,6 @@ class HudiReadOptions:
             lambda v: str(v).lower() == "true",
         ),
         "hoodie.read.input.partitions": ("input_partitions", int),
-        "hoodie.read.log.decode": ("log_decode", str),  # repo extension
     }
 
     def resolve(self) -> "HudiReadOptions":

@@ -21,6 +21,12 @@ Scale: both steps shuffle exactly once on the record key. At 100 TB the
 window dedup is a single hash-partitioned sort per key-partition; the
 delete join aggregates deletes first (deletes << data) so the join side is
 small and AQE will broadcast it.
+
+Hudi table reads do not run these pipelines: they merge per file slice
+in ``sources/pyds.py::_merge_slice_table``, with no shuffle. This module
+is the DataFrame reference implementation of the same rules, checked
+against one model in tests/test_merge_properties.py and run by
+workloads/merge_semantics.py.
 """
 
 from __future__ import annotations

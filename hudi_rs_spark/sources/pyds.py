@@ -34,9 +34,8 @@ Scale: per-slice partitions give the same parallelism as the Spark
 parquet reader's split planning for typical Hudi file sizing (~128 MB
 base files); the MOR merge is slice-local (no shuffle at all — the
 merge key never leaves its file group by construction). The eager
-``HudiTable.read()`` path remains the better choice when one slice is
-huge (it can shuffle-merge), but at Hudi's write sizing the connector
-plan IS the scalable plan.
+``HudiTable.read()`` path runs the same ``_read_slice`` for its
+log-carrying slices.
 """
 
 from __future__ import annotations
@@ -486,11 +485,21 @@ def _cdc_partitions(
     not the as-of slice log lists: a compaction inside the window drops
     pre-compaction logs from the slice view and would silently truncate
     the feed. Shared by the batch queryType=cdc path and the streaming
-    CDC source (each micro-batch is one such window)."""
+    CDC source (each micro-batch is one such window).
+
+    Files a ``.clean`` instant deleted are left out here; any other
+    listed file that cannot be read fails the read on the executor, so a
+    lost file or a backend the executors cannot reach never reads as an
+    empty feed."""
     end = end or t.timeline.latest_commit_timestamp()
     valid = sorted(i.timestamp for i in t.timeline.instants_as_of(end))
     boundary = t.timeline.earliest_active_timestamp()
     pending = sorted(t.timeline.pending_timestamps)
+    cleaned = t.timeline.clean_deletions()[0]
+    groups = {
+        g: [rel for rel in rels if rel not in cleaned]
+        for g, rels in sorted(t.cdc_log_groups(start, end).items())
+    }
     return [
         HudiSlicePartition(
             base_file="",
@@ -507,7 +516,7 @@ def _cdc_partitions(
             cdc=True,
             storage_options=getattr(t, "storage_options", None),
         )
-        for _group, rels in sorted(t.cdc_log_groups(start, end).items())
+        for rels in groups.values()
         if rels
     ]
 
@@ -540,9 +549,12 @@ def _slice_partitions(
     as_of: str | None,
     read_optimized: bool,
     start_exclusive: str | None = None,
+    resolved: T.StructType | None = None,
 ) -> list[HudiSlicePartition]:
     """Driver-side: payload one picklable InputPartition per file slice
-    (shared by the batch reader and the streaming micro-batch planner)."""
+    (shared by the batch reader, the streaming micro-batch planner and
+    ``HudiTable._execute_slices``). ``resolved`` is the schema already
+    resolved over a wider slice set the caller reads alongside these."""
     from hudi_rs_spark.config.table_config import MergeStrategy, TableType
 
     if not slices:
@@ -552,7 +564,9 @@ def _slice_partitions(
     from hudi_rs_spark.write.ddl import rename_chain
 
     renames = rename_chain(t.config.props)
-    resolved = _as_nullable(t._resolve_schema(slices))
+    if resolved is None:
+        resolved = t._resolve_schema(slices)
+    resolved = _as_nullable(resolved)
     merge_logs = (
         not read_optimized and t.config.table_type != TableType.COPY_ON_WRITE
     )
@@ -714,7 +728,7 @@ def _read_slice(partition: HudiSlicePartition):
 def _read_cdc_slice(partition: HudiSlicePartition):
     """Executor-side CDC decode: change rows from this slice's type-6
     log blocks inside the commit window — same validity gating as data
-    blocks (HudiTable.read_changes, distributed)."""
+    blocks (the connector's queryType=cdc and HudiTable.read_changes)."""
     import pyarrow as pa
 
     from hudi_rs_spark.fs.storage import storage_for
@@ -724,12 +738,8 @@ def _read_cdc_slice(partition: HudiSlicePartition):
     if partition.log_files:
         # prime this worker's storage cache (see _read_slice)
         storage_for(partition.log_files[0], partition.storage_options)
-    file_blocks = []
-    for p in partition.log_files:
-        try:
-            file_blocks.append(logreader.read_log_file(p))
-        except FileNotFoundError:
-            continue  # cleaned between planning and read
+    # no FileNotFoundError skip: planning already left out cleaned files
+    file_blocks = [logreader.read_log_file(p) for p in partition.log_files]
     targets: set[str] = set()
     for blocks in file_blocks:
         targets |= logreader.rollback_targets(blocks)
@@ -826,8 +836,10 @@ def _conform_table(
 
 
 def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
-    """Decode + validity-filter this slice's log blocks (same rollback /
-    valid-commit / archival rules as the driver and mapInPandas paths)."""
+    """Decode + validity-filter this slice's log blocks: rollback
+    targets aggregate across all of the slice's log files before any
+    block is filtered (scanner.rs CollectedBlocks), then the valid-commit,
+    pending and archival rules of ``logreader.valid_blocks`` apply."""
     from hudi_rs_spark.logfile import reader as logreader
     from hudi_rs_spark.sources.conform import apply_renames, conform_row
 
@@ -842,8 +854,7 @@ def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
         for b in logreader.valid_blocks(
             blocks,
             # Incremental/streaming windows must exclude pre-window log
-            # blocks BEFORE the merge (mirrors the eager path's
-            # hudi.py _execute_slices gating): otherwise a pre-window row
+            # blocks BEFORE the merge: otherwise a pre-window row
             # with a higher ordering value wins the slice merge and the
             # post-merge commit window then drops the key entirely.
             partition.start_exclusive or None,
@@ -871,7 +882,7 @@ def _sort_key_desc_nulls_last(vals):
 def _merge_slice_table(combined, deletes, partition, struct):
     """Slice-local OVERWRITE_WITH_LATEST merge, mirroring
     operators/merge.py::latest_by_key + merge_with_deletes exactly
-    (fixture-matrix equivalence against the Spark path is the test).
+    (tests/test_merge_properties.py checks both against one model).
 
     Arrow-native for the wide data: winner selection runs over just the
     key/ordering/seqno columns (python scalars — cheap, three thin

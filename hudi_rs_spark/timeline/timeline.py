@@ -48,6 +48,10 @@ class Timeline:
     # service plan marker file names collected by load() — None when
     # this Timeline was constructed directly (tests): fall back to a list
     _service_markers: list | None = None
+    # completed ``.clean`` instant file names (same lifecycle)
+    _clean_markers: list | None = None
+    # memoized clean_deletions()
+    _clean_deletions: tuple | None = None
 
     @classmethod
     def load(cls, base_path: str, config: HudiTableConfig) -> "Timeline":
@@ -61,8 +65,12 @@ class Timeline:
         instants: list[Instant] = []
         pending: set[str] = set()
         service_markers: list[str] = []
+        clean_markers: list[str] = []
         for entry in storage_for(base_path).list_dir(timeline_dir):
             if entry.is_dir:
+                continue
+            if entry.name.endswith(".clean"):
+                clean_markers.append(entry.name)
                 continue
             if entry.name.endswith(
                 (".compaction.requested", ".clustering.requested")
@@ -88,6 +96,7 @@ class Timeline:
             pending_timestamps=pending,
         )
         object.__setattr__(tl, "_service_markers", service_markers)
+        object.__setattr__(tl, "_clean_markers", clean_markers)
         return tl
 
     # -- archived timeline (timeline/mod.rs:98-135 double gate) -----------
@@ -153,6 +162,42 @@ class Timeline:
                 out[ts] = _json.loads(payload) if payload else {}
             except (OSError, ValueError):
                 out[ts] = {}
+        return out
+
+    def clean_deletions(self) -> tuple[frozenset[str], str]:
+        """(relative paths the completed ``.clean`` instants deleted, the
+        newest ``earliestCommitToRetain``) from write/clean.py's JSON
+        clean metadata. The authority that tells a cleaned file from a
+        lost or unreachable one: readers skip only the former."""
+        if self._clean_deletions is not None:
+            return self._clean_deletions
+        import json as _json
+
+        from hudi_rs_spark.fs.storage import storage_for
+
+        st = storage_for(self.base_path)
+        markers = self._clean_markers
+        if markers is None:
+            markers = [
+                e.name
+                for e in st.list_dir(self.timeline_dir)
+                if not e.is_dir and e.name.endswith(".clean")
+            ]
+        deleted: set[str] = set()
+        boundary = ""
+        for name in markers:
+            try:
+                cm = _json.loads(st.read_bytes(f"{self.timeline_dir}/{name}"))
+            except (OSError, ValueError):
+                continue  # not this writer's JSON clean metadata
+            if not isinstance(cm, dict):
+                continue
+            boundary = max(boundary, str(cm.get("earliestCommitToRetain") or ""))
+            for part, pm in (cm.get("partitionMetadata") or {}).items():
+                for nm in pm.get("deletePathPatterns", ()):
+                    deleted.add(f"{part}/{nm}" if part else nm)
+        out = (frozenset(deleted), boundary)
+        object.__setattr__(self, "_clean_deletions", out)
         return out
 
     def pending_service_anchors(self) -> set[str]:

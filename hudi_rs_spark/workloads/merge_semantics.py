@@ -1,8 +1,11 @@
 """Merge-on-read semantics exercised on the driver's plain `events` table.
 
-The Hudi-format reader (sources/hudi.py) uses operators/merge.py on real
-MOR tables; these queries run the SAME operator code on the synthetic
-events stream so the duckdb oracle can hash-check the semantics:
+operators/merge.py is the DataFrame reference implementation of the
+Hudi merge; real MOR tables merge slice-locally in
+sources/pyds.py::_merge_slice_table, and tests/test_merge_properties.py
+checks both against one model. These queries run the operator code on
+the synthetic events stream so the duckdb oracle can hash-check the
+semantics:
 latest-wins per key, delete-ordering resolution, half-open incremental
 windows, and as-of (time travel) states — mirroring
 /root/reference/crates/core/src/merge/record_merger.rs and

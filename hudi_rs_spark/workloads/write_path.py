@@ -386,10 +386,7 @@ def write_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register(spark)
     path = _ensure_lifecycle_table(spark, sf_dir, compacted=False)
-    # force the scale path: executor-side block decode (mapInPandas) —
-    # the oracle then certifies the distributed decode, and pytest pins
-    # driver-vs-distributed parity (tests/test_advice_fixes_r10.py)
-    feed = HudiTable(path, spark).read_changes(None, mode="distributed")
+    feed = HudiTable(path, spark).read_changes(None)
     return (
         feed.select(
             "op",

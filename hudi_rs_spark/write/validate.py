@@ -80,29 +80,8 @@ def validate_table(path: str, sample_keys: int = 64, spark=None) -> dict:
     # commit metadata: every path a completed instant wrote must exist
     # unless a .clean instant deleted it (or it predates the newest
     # clean boundary — aged residue clean already passed over)
-    import json as _json
-
-    from hudi_rs_spark.write.config import WriteConfig as _WC
-    from hudi_rs_spark.write.writer import timeline_dir as _tdir_of
-
     problems = []
-    tdir = _tdir_of(_WC(path=base, table_version=tc.table_version))
-    clean_deleted: set[str] = set()
-    clean_boundary = ""
-    if st.isdir(tdir):
-        for e in st.list_dir(tdir):
-            if e.is_dir or not e.name.endswith(".clean"):
-                continue
-            try:
-                cm = _json.loads(st.read_text(f"{tdir}/{e.name}"))
-            except Exception:  # noqa: BLE001
-                continue
-            clean_boundary = max(
-                clean_boundary, str(cm.get("earliestCommitToRetain", ""))
-            )
-            for part, pm in (cm.get("partitionMetadata") or {}).items():
-                for nm in pm.get("deletePathPatterns", ()):
-                    clean_deleted.add(f"{part}/{nm}" if part else nm)
+    clean_deleted, clean_boundary = table.timeline.clean_deletions()
     for i in table.timeline.instants:
         if not i.is_completed:
             continue

@@ -1,10 +1,9 @@
 """Regression tests for the round-10 fixes (VERDICT + ADVICE r9).
 
 1. (verdict #1 / perf-weak) HudiTable.read_changes decoded every CDC
-   block into a driver-side Python list. Now it auto-gates to an
-   executor-side mapInPandas decode (logfile/distributed.
-   decode_cdc_distributed) past the MOR thresholds; forced-distributed
-   must match the driver decode bit-for-bit.
+   block into a driver-side Python list. Now every CDC log group
+   decodes on an executor; the feed must hold the expected ops per
+   commit, full window and windowed, and drop rolled-back commits.
 2. (advice high) archive_timeline flipped the archived-read gate only
    AFTER deleting active instant files — a crash in between left the
    gate off, and rollback_failed_writes then treated every archived
@@ -87,37 +86,44 @@ class TestDistributedCdcFeed:
             (r.commit_time, r.op, r.ts_ms, r.before, r.after) for r in rows
         )
 
-    def test_forced_distributed_matches_driver(self, spark, tmp_path):
+    @staticmethod
+    def _ops_by_commit(rows):
+        out: dict = {}
+        for r in rows:
+            ops = out.setdefault(r.commit_time, {})
+            ops[r.op] = ops.get(r.op, 0) + 1
+        return [out[c] for c in sorted(out)]
+
+    def test_op_counts_per_commit(self, spark, tmp_path):
         from hudi_rs_spark.sources.hudi import HudiTable
 
         tdir = str(tmp_path / "t")
         self._multi_commit_table(spark, tdir)
         t = HudiTable(tdir, spark)
-        driver = t.read_changes(None, mode="driver").collect()
-        dist = t.read_changes(None, mode="distributed").collect()
-        assert len(driver) == len(dist) > 0
-        assert self._key(driver) == self._key(dist)
-        # windowed parity too (start-exclusive bound applies executor-side)
+        # insert 10; update 3, 4; update 3 + insert 11; delete 7
+        assert self._ops_by_commit(t.read_changes(None).collect()) == [
+            {"i": 10}, {"u": 2}, {"u": 1, "i": 1}, {"d": 1},
+        ]
+        # window (c1, c3]: the start bound applies executor-side
         inst = sorted(i.timestamp for i in t.timeline.instants)
-        w_driver = t.read_changes(inst[0], inst[2], mode="driver").collect()
-        w_dist = t.read_changes(inst[0], inst[2], mode="distributed").collect()
-        assert self._key(w_driver) == self._key(w_dist)
+        assert self._ops_by_commit(
+            t.read_changes(inst[0], inst[2]).collect()
+        ) == [{"u": 2}, {"u": 1, "i": 1}]
 
-    def test_distributed_plan_has_no_local_relation(self, spark, tmp_path):
-        # the driver path ships a LocalRelation (createDataFrame of the
-        # whole feed); the distributed path must scan task rows through
-        # mapInPandas instead
+    def test_feed_decodes_on_executors(self, spark, tmp_path):
+        # the CDC log groups ship as slice descriptors and decode in one
+        # mapInArrow; the feed itself is never built on the driver
         from hudi_rs_spark.sources.hudi import HudiTable
 
         tdir = str(tmp_path / "t")
         self._multi_commit_table(spark, tdir)
-        df = HudiTable(tdir, spark).read_changes(None, mode="distributed")
+        df = HudiTable(tdir, spark).read_changes(None)
         plan = df._jdf.queryExecution().analyzed().toString()
-        assert "mapInPandas" in plan or "MapInPandas" in plan
+        assert "MapInArrow" in plan
 
-    def test_rolled_back_commit_stays_out_distributed(self, spark, tmp_path):
+    def test_rolled_back_commit_stays_out(self, spark, tmp_path):
         # a voided commit's CDC blocks must not leak through the
-        # executor-side decode (rollback targets ship into the closure)
+        # executor-side decode (rollback targets aggregate per group)
         from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.upsert import upsert
 
@@ -128,7 +134,7 @@ class TestDistributedCdcFeed:
             tdir,
         )
         t = HudiTable(tdir, spark)
-        before = self._key(t.read_changes(None, mode="distributed").collect())
+        before = self._key(t.read_changes(None).collect())
         # simulate a crashed third write: data + cdc blocks at an
         # uncommitted instant, then roll it back
         from hudi_rs_spark.write.rollback import rollback_failed_writes
@@ -154,10 +160,10 @@ class TestDistributedCdcFeed:
         st.remove(f"{tl_dir}/{latest}")
         rollback_failed_writes(tdir)
         t2 = HudiTable(tdir, spark)
-        after_driver = self._key(t2.read_changes(None, mode="driver").collect())
-        after_dist = self._key(t2.read_changes(None, mode="distributed").collect())
-        assert after_driver == after_dist
-        assert len(after_dist) < len(before)
+        after = self._key(t2.read_changes(None).collect())
+        victim_ts = latest.split(".")[0].split("_")[0]
+        assert len(after) < len(before)
+        assert after == [k for k in before if k[0] != victim_ts]
 
 
 # ---------------------------------------------------------------------------

@@ -15,7 +15,7 @@ import pytest
 import os
 
 from hudi_rs_spark.sources.hudi import HudiTable
-from tests.synth import SynthTable, avro_schema, parquet_data_block
+from tests.synth import SynthTable, avro_schema, delete_block, parquet_data_block
 
 C1 = "20240101000000000"
 C2 = "20240102000000000"
@@ -115,6 +115,72 @@ class TestEagerLogOnly:
         t = HudiTable(_mixed_table(tmp_path).base_path, spark)
         rows, _size = t.compute_table_stats()
         assert rows == 1
+
+
+def _three_kinds_table(tmp_path) -> SynthTable:
+    """One slice of each kind. g1-0: base only (C1). g2-0: base at C1,
+    a log at C2 updating b1 and deleting b2, a second log at C3 updating
+    b3. g3-0: log only, inserted at C2, c1 updated at C3."""
+    t = SynthTable(os.path.join(str(tmp_path), "three"))
+    t.write_base("g1-0", C1, {"id": ["a1", "a2"], "ts": [1, 1],
+                              "val": ["base", "base"]}, ["a1", "a2"])
+    t.write_base("g2-0", C1, {"id": ["b1", "b2", "b3"], "ts": [1, 1, 1],
+                              "val": ["base"] * 3}, ["b1", "b2", "b3"])
+    t.commit(C1, schema=SCHEMA)
+    upd = t.log_rows(C2, {"id": ["b1"], "ts": [2], "val": ["upd"]}, ["b1"], "log")
+    t.append_log("g2-0", C1, parquet_data_block(C2, upd)
+                 + delete_block(C2, [("b2", "", 5)]), stats_instant=C2)
+    ins = t.log_rows(C2, {"id": ["c1", "c2"], "ts": [1, 1],
+                          "val": ["new", "new"]}, ["c1", "c2"], "log")
+    t.append_log("g3-0", C2, parquet_data_block(C2, ins), stats_instant=C2)
+    t.commit(C2, schema=SCHEMA)
+    upd = t.log_rows(C3, {"id": ["b3"], "ts": [3], "val": ["upd"]}, ["b3"], "log")
+    t.append_log("g2-0", C1, parquet_data_block(C3, upd), version=2,
+                 stats_instant=C3)
+    upd = t.log_rows(C3, {"id": ["c1"], "ts": [2], "val": ["upd"]}, ["c1"], "log")
+    t.append_log("g3-0", C2, parquet_data_block(C3, upd), version=2,
+                 stats_instant=C3)
+    t.commit(C3, schema=SCHEMA)
+    return t
+
+
+class TestMixedSliceKinds:
+    """Base-only, log-carrying and log-only slices in one read: the
+    base-only slice scans natively, the others merge slice by slice
+    (pyds._read_slice), and the union holds every live key exactly once
+    with no shuffle-merge (no Window) in the plan."""
+
+    @staticmethod
+    def _check(df, want: dict):
+        rows = [(r["id"], r["val"]) for r in df.collect()]
+        assert sorted(k for k, _ in rows) == sorted(want)  # each key once
+        assert dict(rows) == want
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "Window" not in plan
+        assert "MapInArrow" in plan
+
+    def test_snapshot_time_travel_incremental(self, spark, tmp_path):
+        from hudi_rs_spark.config.read_config import HudiReadOptions
+
+        t = HudiTable(_three_kinds_table(tmp_path).base_path, spark)
+        kinds = {
+            s.file_id: (s.base_file is not None, s.has_log_files)
+            for s in t.get_file_slices()
+        }
+        assert kinds == {
+            "g1-0": (True, False), "g2-0": (True, True), "g3-0": (False, True)
+        }
+        self._check(t.read(), {
+            "a1": "base", "a2": "base", "b1": "upd", "b3": "upd",
+            "c1": "upd", "c2": "new",
+        })
+        self._check(t.read(HudiReadOptions(as_of_timestamp=C2)), {
+            "a1": "base", "a2": "base", "b1": "upd", "b3": "base",
+            "c1": "new", "c2": "new",
+        })
+        self._check(t.read_incremental(C1), {
+            "b1": "upd", "b3": "upd", "c1": "upd", "c2": "new",
+        })
 
 
 class TestPerSliceRead:

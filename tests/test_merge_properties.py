@@ -117,3 +117,62 @@ def test_merge_matches_model(spark, data, deletes):
     }
     want = model_merge(data, deletes)
     assert got_rows == want, f"data={data} deletes={deletes}"
+
+
+SLICE_STRUCT = T.StructType(
+    [
+        T.StructField("_hoodie_commit_time", T.StringType(), True),
+        T.StructField("_hoodie_commit_seqno", T.StringType(), True),
+        T.StructField("_hoodie_record_key", T.StringType(), True),
+        T.StructField("ts", T.IntegerType(), True),
+        T.StructField("value", T.IntegerType(), True),
+    ]
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.lists(data_row, min_size=1, max_size=12),
+    deletes=st.lists(delete_row, min_size=0, max_size=6),
+)
+def test_slice_merge_matches_model(data, deletes):
+    """The per-slice merge every MOR read runs (pyds._merge_slice_table)
+    against the same model. Seqnos are drawn as ``{commit}_{n}``, the
+    way writers stamp ``_hoodie_commit_seqno``: every seqno starts with
+    its commit, so ordering by seqno alone orders by commit first. That
+    is why the model's (ordering, commit, seqno) order equals the
+    reference's (ordering, seqno) order, which this merge implements."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from hudi_rs_spark.sources.pyds import HudiSlicePartition, _merge_slice_table
+
+    rows = [
+        (commit, f"{commit}_{n}", key, ts, value)
+        for n, (commit, _seqno, key, ts, value) in enumerate(data)
+    ]
+    combined = pa.Table.from_pylist(
+        [dict(zip(SLICE_STRUCT.names, r)) for r in rows],
+        schema=to_arrow_schema(SLICE_STRUCT),
+    )
+    partition = HudiSlicePartition(
+        base_file=None,
+        log_files=[],
+        schema_json=SLICE_STRUCT.json(),
+        ordering="ts",
+        strategy="OVERWRITE_WITH_LATEST",
+        valid_instants=list(COMMITS),
+        archival_boundary=None,
+        pending_instants=[],
+        as_of=None,
+        merge_logs=True,
+    )
+    out = _merge_slice_table(
+        combined,
+        [(commit, key, ts) for key, ts, commit in deletes],
+        partition,
+        SLICE_STRUCT,
+    )
+    got = set(zip(*(out.column(n).to_pylist() for n in SLICE_STRUCT.names)))
+    want = model_merge(rows, deletes)
+    assert got == want, f"rows={rows} deletes={deletes}"

@@ -113,18 +113,6 @@ class TestPartialUpdateMerge:
         ]
         assert got == MERGED
 
-    def test_distributed_decode_parity(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        _seed(spark, path)
-        _apply_sparse(spark, path)
-        got = [
-            tuple(r)
-            for r in HudiTable(path, spark)
-            .read(HudiReadOptions(log_decode="distributed"))
-            .select("id", "a", "b", "v").orderBy("id").collect()
-        ]
-        assert got == MERGED
-
     def test_newest_non_null_wins_not_newest_row(self, spark, tmp_path):
         # two sparse updates to the SAME column: later ordering wins;
         # a later update to a DIFFERENT column must not resurrect older

@@ -135,19 +135,16 @@ class TestHudiReadPlans:
         )
         assert "decimalField" not in scan_line  # unreferenced column pruned
 
-    def test_mor_merge_single_shuffle_on_group_key(self, spark, v8_trips_table):
+    def test_mor_merge_is_slice_local(self, spark, v8_trips_table):
         from hudi_rs_spark import HudiTable
 
         t = HudiTable(v8_trips_table, spark)
         plan = _plan(t.read())
-        exchanges = [
-            l for l in plan.splitlines() if "Exchange hashpartitioning" in l
-        ]
-        # window dedup: one shuffle on (__fg, record_key); Spark plans the
-        # rank<=1 filter as WindowGroupLimit (partial before the shuffle)
-        assert len(exchanges) == 1, exchanges
-        assert "WindowGroupLimit" in plan
-        assert "hashpartitioning(__fg" in plan
+        # log-carrying slices merge inside one mapInArrow task each
+        # (pyds._read_slice): no shuffle and no window for the merge
+        assert "MapInArrow" in plan
+        assert "Exchange hashpartitioning" not in plan
+        assert "Window" not in plan
 
 
 class TestRound3OperatorPlans:

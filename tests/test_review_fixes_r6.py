@@ -115,7 +115,9 @@ class TestDerivedFeedNoMetaFields:
 
 
 class TestCdcCleanedFileTolerance:
-    def test_read_changes_skips_cleaned_log(self, spark, tmp_path):
+    def _table(self, tmp_path) -> tuple[SynthTable, str]:
+        """Two CDC commits, each in its own log file; returns the table
+        and the relative path of C2's log file."""
         t = SynthTable(os.path.join(str(tmp_path), "cdc"))
         t.write_base("g1-0", C1, {"id": ["k1"], "ts": [1], "val": ["a"]}, ["k1"])
         t.commit(C1, schema=SCHEMA)
@@ -129,8 +131,28 @@ class TestCdcCleanedFileTolerance:
         )
         t.append_log("g1-0", C1, payload3, version=2, stats_instant=C3)
         t.commit(C3, schema=SCHEMA)
-        # cleaner removed the first log file after its commit
+        return t, name2
+
+    def test_read_changes_skips_cleaned_log(self, spark, tmp_path):
+        t, name2 = self._table(tmp_path)
+        # the cleaner removed the first log file after its commit and
+        # recorded the deletion in its .clean instant (write/clean.py)
         os.remove(os.path.join(t.base_path, name2))
+        clean_meta = {
+            "earliestCommitToRetain": C3,
+            "partitionMetadata": {"": {"deletePathPatterns": [name2]}},
+        }
+        with open(os.path.join(t.timeline_dir, "20240104000000000.clean"), "w") as f:
+            json.dump(clean_meta, f)
         table = HudiTable(t.base_path, spark)
         feed = table.read_changes(C1, C3).collect()
         assert [(r["commit_time"], r["op"]) for r in feed] == [(C3, "d")]
+
+    def test_read_changes_fails_on_lost_log(self, spark, tmp_path):
+        """A listed log file no clean instant deleted is lost, not
+        cleaned: the feed fails instead of silently dropping its rows."""
+        t, name2 = self._table(tmp_path)
+        os.remove(os.path.join(t.base_path, name2))
+        table = HudiTable(t.base_path, spark)
+        with pytest.raises(Exception, match="FileNotFoundError"):
+            table.read_changes(C1, C3).collect()

@@ -50,6 +50,35 @@ def _synth(tmp_path) -> SynthTable:
     return t
 
 
+def _cdc_feed_in_process(table: HudiTable, start: str, end: str) -> list[dict]:
+    """Plan ``table``'s CDC feed and decode its log groups in this
+    process. memory:// and the registered mock:// backend live only in
+    this process, while ``read_changes`` decodes the same partitions with
+    the same function on executor processes."""
+    from hudi_rs_spark.sources.pyds import (
+        HudiPyDataSource,
+        _cdc_partitions,
+        _read_slice,
+    )
+
+    parts = _cdc_partitions(
+        table, start, end, HudiPyDataSource.CDC_SCHEMA.json()
+    )
+    return [row for p in parts for b in _read_slice(p) for row in b.to_pylist()]
+
+
+def _assert_feed_or_unreachable(table: HudiTable, start: str, end: str) -> None:
+    """The public ``read_changes`` on a backend only this process may
+    hold: either the executors reach it and return the feed, or the read
+    fails on the unreadable log file. It never reads as an empty feed."""
+    try:
+        feed = table.read_changes(start, end).collect()
+    except Exception as e:  # noqa: BLE001 — the executor error is wrapped
+        assert "FileNotFoundError" in str(e), e
+        return
+    assert [(r["commit_time"], r["op"]) for r in feed] == [(end, "u")]
+
+
 class TestBackends:
     def test_scheme_dispatch(self):
         assert storage_for("/plain/path") is storage_for("file:///plain/path")
@@ -117,8 +146,9 @@ class TestPlannerOnMemory:
 
     def test_cdc_feed_decodes_from_memory(self, spark, tmp_path):
         table = self._mem_table(tmp_path, spark)
-        feed = table.read_changes(C1, C2).collect()
+        feed = _cdc_feed_in_process(table, C1, C2)
         assert [(r["commit_time"], r["op"]) for r in feed] == [(C2, "u")]
+        _assert_feed_or_unreachable(table, C1, C2)
 
 
 class TestFileUriEndToEnd:
@@ -255,8 +285,9 @@ class TestPlannerOnArrowFS:
 
     def test_cdc_feed_decodes_via_arrow_fs(self, spark, tmp_path):
         table, _t = self._arrow_table(tmp_path, spark)
-        feed = table.read_changes(C1, C2).collect()
+        feed = _cdc_feed_in_process(table, C1, C2)
         assert [(r["commit_time"], r["op"]) for r in feed] == [(C2, "u")]
+        _assert_feed_or_unreachable(table, C1, C2)
 
     def test_walk_and_listing_primitives(self, spark, tmp_path):
         _table, t = self._arrow_table(tmp_path, spark)
